@@ -77,7 +77,7 @@ object Bench {
     // Compact the printed values to 3 significant digits and, if the
     // suite outgrows the budget, keep the most expensive queries in
     // the printed dict; the full-precision breakdown always goes to
-    // BENCH_LOCAL.json alongside the repo for offline reading.
+    // BENCH_LOCAL.json in the working directory for offline reading.
     def fmt(v: Double): String =
       if (v >= 100) f"$v%.0f" else if (v >= 10) f"$v%.1f"
       else if (v >= 1) f"$v%.2f" else f"$v%.3f"
@@ -131,7 +131,9 @@ object Bench {
     // never touch the record.
     if (only.isEmpty) try {
       val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      val f = new java.io.File("/root/repo/BENCH_LOCAL.json")
+      // the working directory: `sbt runMain` forks in the checkout
+      // it builds, so each checkout keeps its own run history
+      val f = new java.io.File("BENCH_LOCAL.json")
       val root: com.fasterxml.jackson.databind.node.ObjectNode = {
         val old = if (f.exists()) {
           try mapper.readTree(f) catch { case _: Throwable => null }

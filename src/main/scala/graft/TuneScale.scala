@@ -8,8 +8,10 @@ import org.apache.spark.sql.functions._
   * fixtures (≤ 5,970 rows) and measures the laws the 100-TB story
   * rests on — graph recall at CONSTANT ef across N (explored rows ∝
   * log N), and the IVF probed fraction ∝ N^(−1/2). Not part of the
-  * driver contract — run by hand, the [[TuneGraph]]/[[TuneAnn]]
-  * discipline; the committed record table lives in ARCHITECTURE.md.
+  * driver contract — run by hand (`tools/run-main.sh graft.TuneScale`);
+  * the committed record table lives in ARCHITECTURE.md. The serve
+  * and build parameters come from their size laws, so every readout
+  * is the law value for the artifact's own N.
   *
   * Corpus: `CENTERS` (default 4096) cluster centers with coordinates
   * xxhash64-derived in [−1, 1]; vector i sits on center
@@ -135,14 +137,6 @@ object TuneScale {
     val centers = sys.env.get("CENTERS").map(_.toInt).getOrElse(4096)
     val tiers = sys.env.getOrElse("TIERS", "graph,ivf").split(",").map(_.trim).toSet
     val dim = 64
-    // optional serve-budget overrides (artifact reused — serve-only)
-    // and the keyed maxLevel BUILD override
-    Seq("baseHops" -> "BH", "upperHops" -> "UH", "upperEf" -> "UE",
-        "ef" -> "EF", "maxLevel" -> "MAXLEVEL",
-        "exhaustiveCap" -> "ECAP").foreach {
-      case (knob, env) => sys.env.get(env).foreach(v =>
-        spark.conf.set(s"spark.graft.graph.$knob", v))
-    }
 
     for (n <- sizes) {
       // shuffle width scales with the corpus (the 100-TB sizing rule
@@ -202,34 +196,16 @@ object TuneScale {
               val lvl = pr.getInt(pr.fieldIndex("maxlevel"))
               val entries = pr.getInt(pr.fieldIndex("entries"))
               val pn = pr.getLong(pr.fieldIndex("n"))
-              // explored budget per query at the SERVED defaults —
-              // the law values for the artifact's own N, overridden
-              // by the same session knobs the serve itself reads
-              // (r13: the readout can no longer silently diverge
-              // from the serve)
-              val (bhL, uhL, ueL, efL) = graft.operators.GraphAnn.serveBudgetFor(pn)
-              def knob(k: String, dflt: Int) =
-                spark.conf.getOption(s"spark.graft.graph.$k").map(_.toInt).getOrElse(dflt)
-              val (bh, uh, ue, ef) = (knob("baseHops", bhL), knob("upperHops", uhL),
-                knob("upperEf", ueL), knob("ef", efL))
-              // the shared law formula itself (exhaustive model-scale
-              // layer + walks above it + base walk), at the
-              // artifact's own degree — and never printed when a
-              // session knob overrides the law, where the formula
-              // would pair a wrong budget with the measured recall
-              // (r13 review)
-              val mArt = pr.getInt(pr.fieldIndex("m"))
-              val overridden =
-                Seq("baseHops", "upperHops", "upperEf", "ef", "exhaustiveCap")
-                  .exists(k => spark.conf.getOption(s"spark.graft.graph.$k").isDefined)
-              val explored =
-                if (overridden) "overridden"
-                else d.graphExploredBudget(mArt, pn, 10).toString
+              // explored budget per query: the law values for the
+              // artifact's own N and degree — the same law the serve
+              // reads, so the readout cannot diverge from the serve
+              val (bh, uh, ue, ef) = graft.operators.GraphAnn.serveBudgetFor(pn)
+              val explored = d.graphExploredBudget(pr.getInt(pr.fieldIndex("m")), pn, 10)
               s"maxlevel=$lvl entries=$entries bh=$bh uh=$uh ue=$ue ef=$ef explored=$explored"
             } else {
               val cells = spark.read.parquet(s"$p/centroids").count()
-              // the same resolver the serve uses (knob override or
-              // the r13 √cells law) — never a hardcoded constant
+              // the same resolver the serve uses (the r13 √cells
+              // law) — never a hardcoded constant
               val nprobe = d.annNprobeFor(cells.toInt)
               f"cells=$cells nprobe=$nprobe probedFrac=${nprobe.toDouble / cells}%.4f"
             }

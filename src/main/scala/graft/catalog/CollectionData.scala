@@ -912,15 +912,11 @@ class CollectionData(client: ChromaSpark) {
     * FRACTION nprobe/√N shrinks as the collection grows, which is
     * the contract the reference's `hnsw:*` metadata implies. The
     * clamp bounds the other axis (assignment is O(N·k·dim); the
-    * 65536 cap keeps centroid sets broadcastable at any N). Explicit
-    * `spark.graft.collection.annClusters` still wins for operators
-    * who have calibrated their own trade.
+    * 65536 cap keeps centroid sets broadcastable at any N).
     */
   private[catalog] def annClustersFor(liveVecRows: Long): Int =
-    spark.conf.getOption("spark.graft.collection.annClusters")
-      .map(_.toInt)
-      .getOrElse(math.min(65536, math.max(4,
-        math.ceil(math.sqrt(math.max(1L, liveVecRows).toDouble)).toInt)))
+    math.min(65536, math.max(4,
+      math.ceil(math.sqrt(math.max(1L, liveVecRows).toDouble)).toInt))
 
   /** Probe width for an index with `cells` cells: below the scale
     * gate a recall-calibrated constant (24 holds ≥0.9 recall@10 on
@@ -933,11 +929,10 @@ class CollectionData(client: ChromaSpark) {
     * (nprobe·N/cells ∝ N^(3/4)), while the widening probe tracks the
     * measured recall decay (constant nprobe read 0.92→0.81 over
     * 100k→1.6M; the law column in ARCHITECTURE.md r13 holds the
-    * floor). The conf knob remains an override, not the mechanism.
+    * floor).
     */
   private[graft] def annNprobeFor(cells: Int): Int =
-    spark.conf.getOption("spark.graft.collection.annNprobe")
-      .map(_.toInt).getOrElse(CollectionData.nprobeLawFor(cells))
+    CollectionData.nprobeLawFor(cells)
 
   /** Live rows with embeddings — the N the cell count derives from.
     * Driver-resolved from the snapshot cache when small, one pushed
@@ -1071,30 +1066,12 @@ class CollectionData(client: ChromaSpark) {
   private val GraphDefaultM = 8
   private val GraphDefaultCef = 256
 
-  /** Base-layer walk length — CONSTANT (r10, the layered-hierarchy
-    * law change). The r9 flat graph had to derive hops = ⌈log_M N⌉
-    * because every query started at shared centroid-near entries and
-    * the walk had to CROSS the corpus; with the layered descent
-    * ([[graphMaxLevelFor]]) the base beam starts query-LOCAL (seeded
-    * by the layer above), so its job is local refinement — a fixed
-    * number of hops regardless of N, exactly HNSW's per-layer
-    * constant expected path length (Malkov & Yashunin 2018, §4.2).
-    * Conf-overridable (serve knob, not artifact shape); the params
-    * table records the LAW default, never a sweep override.
+  /** Read a positive-integer graph conf (`maxLevel`, `pbBuckets`,
+    * `exhaustiveCap`) from session conf, VALIDATED (r11): a 0,
+    * negative or non-integer value fails loudly instead of silently
+    * degrading the serve or the build. Unset, the law value holds.
     */
-  private[catalog] val GraphBaseHopsDefault = 3
-
-  /** Read a serve-time graph knob from session conf, VALIDATED (r11,
-    * closing an r10 advisory): these knobs ride the production serve
-    * path but are NOT folded into any artifact or pointer identity
-    * (unlike `maxLevel`), so a leftover sweep override (TuneGraph in
-    * the same session) or a 0/negative value would silently degrade
-    * a certified serve. Non-integer or non-positive values fail
-    * loudly; any deviation from the law default emits one warning
-    * per (key, value) so the override is visible in the session log.
-    */
-  private def graphServeKnob(key: String, lawDefault: Int,
-                             warnOnDeviation: Boolean = true): Int =
+  private def graphServeKnob(key: String, lawDefault: Int): Int =
     spark.conf.getOption(key) match {
       case None => lawDefault
       case Some(raw) =>
@@ -1105,80 +1082,23 @@ class CollectionData(client: ChromaSpark) {
               s"$key must be a positive integer, got '$raw'") }
         if (v <= 0) throw new IllegalArgumentException(
           s"$key must be a positive integer, got $v")
-        if (warnOnDeviation && v != lawDefault) CollectionData.warnOnce(
-          s"$key=$v overrides the law default $lawDefault — serve knobs " +
-            "are session-scoped and not part of the artifact identity; " +
-            "unset after sweeps to restore the certified serve")
         v
     }
 
-  private[catalog] def GraphBaseHops: Int =
-    graphServeKnob("spark.graft.graph.baseHops", GraphBaseHopsDefault)
-
-  /** Dedup-grouping verify-gate width in PERCENT of the larger norm
-    * (BUILD knob, default 2 — the certified constant the oracles
-    * replay). Folded into the collgraph cache key and
-    * pointer-checked, so an overridden build can never stale-serve a
-    * default one (the maxLevel discipline); overrides are
-    * ops/experiment knobs for TuneGraph sweeps, not certified serves.
-    */
-  /** Frontier-broadcast flag for the graph serve's hop joins: ON by
-    * default (the frontier is |Q|·ef·M rows — model-scale under the
-    * serve's batch contract, and the hint is what reliably arms
-    * dynamic partition pruning); huge offline query batches set
-    * `spark.graft.graph.broadcastFrontier=false` and let AQE pick
-    * the join side (the khop/sssp flag discipline, r12 review
-    * closure).
-    */
   /** Effective partition-bucket count for a graph BUILD over `live`
     * rows: the `spark.graft.graph.pbBuckets` conf override (keyed
     * `-p` segment + pointer-checked, the maxLevel discipline) or the
     * size-derived [[graft.operators.GraphAnn.pbBucketsFor]] law.
     */
   private[catalog] def graphPbBuckets(live: Long): Int =
-    spark.conf.getOption("spark.graft.graph.pbBuckets") match {
-      case None => graft.operators.GraphAnn.pbBucketsFor(live)
-      case Some(raw) =>
-        val v = try raw.trim.toInt catch { case _: NumberFormatException =>
-          throw new IllegalArgumentException(
-            s"spark.graft.graph.pbBuckets must be a positive integer, got '$raw'") }
-        if (v <= 0) throw new IllegalArgumentException(
-          s"spark.graft.graph.pbBuckets must be a positive integer, got $v")
-        v
-    }
+    graphServeKnob("spark.graft.graph.pbBuckets",
+      graft.operators.GraphAnn.pbBucketsFor(live))
 
-  private[catalog] def graphBroadcastFrontier: Boolean =
-    !spark.conf.getOption("spark.graft.graph.broadcastFrontier")
-      .exists(_.trim.equalsIgnoreCase("false"))
-
-  private[catalog] def GraphDedupGatePct: Int =
-    graphServeKnob("spark.graft.graph.dedupGatePct", 2,
-      warnOnDeviation = false)
-
-  /** Per-upper-layer walk length — constant: each layer's seeds come
-    * from the layer above (nested membership), so the within-layer
-    * walk covers an expected O(1) distance before the next descent.
+  /** Dedup-grouping verify-gate width in PERCENT of the larger norm
+    * (the certified constant the oracles replay). The collgraph cache
+    * key and the pointer check carry it as the `-g2-` segment.
     */
-  private[catalog] def GraphUpperHops: Int =
-    graphServeKnob("spark.graft.graph.upperHops", 2)
-
-  /** Upper-layer beam width — constant, and WIDER than the canonical
-    * HNSW upper-layer greedy (ef=1) on purpose: hnswlib's upper walks
-    * can afford ef=1 because its edges are RNG-diversified at insert
-    * time; ours are plain kNN edges, which turn near-duplicate
-    * clusters into cliques a narrow beam cannot escape — measured
-    * across all five fixtures (graph at three SFs, the tripled
-    * planted-copy clique corpora at two): ef=8 collapses one clique
-    * query to recall 0.1, ef=32 leaves 0.80–0.96 tails, ef=64 holds
-    * recall 1.000/1.000 on EVERY fixture at the constant base budget.
-    * Still model-scale everywhere: the upper frontier is |Q|·64·M
-    * rows and upper layers smaller than 64 nodes are searched
-    * exhaustively. RNG-diversified edge selection (the NSG/HNSW
-    * insert heuristic) is the recorded upgrade path if a future
-    * corpus needs narrower upper walks.
-    */
-  private[catalog] def GraphUpperEf: Int =
-    graphServeKnob("spark.graft.graph.upperEf", 64)
+  private[catalog] val GraphDedupGatePct = 2
 
   /** Number of hierarchy layers above the base: L = ⌊log_M N⌋
     * clamped [1, 10] — the canonical HNSW level cap (expected top
@@ -1194,10 +1114,10 @@ class CollectionData(client: ChromaSpark) {
       val raw = math.floor(math.log(math.max(2L, n).toDouble) / math.log(deg)).toInt
       math.min(16, math.max(1, raw))
     }
-    // unlike the walk knobs, a maxLevel override IS folded into the
-    // artifact identity (the cache key's -L segment), so deviation is
-    // safe-by-construction — only validate it parses positive
-    graphServeKnob("spark.graft.graph.maxLevel", law, warnOnDeviation = false)
+    // a maxLevel override is folded into the artifact identity (the
+    // cache key's -L segment), so deviation is safe-by-construction —
+    // only validate it parses positive
+    graphServeKnob("spark.graft.graph.maxLevel", law)
   }
 
   /** Entry-set cap: when the level clamp binds (tiny `hnsw:M` on a
@@ -1231,9 +1151,7 @@ class CollectionData(client: ChromaSpark) {
     */
   private[catalog] def graphBeamEf(searchEf: Option[Int], nResults: Int,
                                    efLaw: Int): Int =
-    searchEf.getOrElse(math.max(
-      graphServeKnob("spark.graft.graph.ef", efLaw),
-      nResults))
+    searchEf.getOrElse(math.max(efLaw, nResults))
 
   /** Explored-rows budget of one query under the layered serve — the
     * spec-pinned scale contract: top layer scored exhaustively
@@ -1243,15 +1161,14 @@ class CollectionData(client: ChromaSpark) {
     */
   private[graft] def graphExploredBudget(m: Int, n: Long, nResults: Int): Long = {
     val lMax = graphMaxLevelFor(m, n)
-    // the serve-budget LAW values (r13), not the session knobs: the
-    // budget this formula pins is what the DEFAULT serve explores at
-    // N. Above the scale gate the serve seeds from the exhaustive
-    // model-scale layer (largest layer ≤ the gate — scored outright,
-    // layers above it are nested subsets and never touched) and
-    // walks only the layers too big to enumerate: budget = one
-    // bounded layer scan + walks · the stepped per-layer constant +
-    // the base walk — a ≤-gate constant plus log₈(N/gate) walks,
-    // still nothing polynomial.
+    // the serve-budget LAW values (r13): the budget this formula
+    // pins is what the serve explores at N. Above the scale gate the
+    // serve seeds from the exhaustive model-scale layer (largest
+    // layer ≤ the gate — scored outright, layers above it are nested
+    // subsets and never touched) and walks only the layers too big
+    // to enumerate: budget = one bounded layer scan + walks · the
+    // stepped per-layer constant + the base walk — a ≤-gate constant
+    // plus log₈(N/gate) walks, still nothing polynomial.
     val (bh, uh, ue, efL) = graft.operators.GraphAnn.serveBudgetFor(n)
     val baseWalk = bh.toLong * math.max(efL, nResults) * m
     val cap = graft.operators.GraphAnn.ExhaustiveLayerCapRows
@@ -1730,8 +1647,9 @@ class CollectionData(client: ChromaSpark) {
     // from serveBudgetFor at query time, never from params) — record
     // the law value for the artifact's own N so the recorded budget
     // matches what the serve will actually run (r14, closing the
-    // r13 readout-divergence advisory: GraphBaseHopsDefault=3 was
-    // recorded unconditionally while above-gate serves walk bh=4).
+    // r13 readout-divergence advisory: the sub-gate base-hop
+    // constant 3 was recorded unconditionally while above-gate
+    // serves walk bh=4).
     Seq((n, m, cef, entries,
         graft.operators.GraphAnn.serveBudgetFor(n)._1,
         maxLevel, nGroupMembers, npb))
@@ -2088,15 +2006,10 @@ class CollectionData(client: ChromaSpark) {
             // explored cost stays ∝ log N — the hierarchy's point —
             // while the per-layer constant steps up past the scale
             // gate, which is what holds the measured recall floor
-            // (the r12 ladder's constant-budget decay). The conf
-            // knobs remain overrides, not the mechanism.
+            // (the r12 ladder's constant-budget decay).
             val (_, gEntries, gN, gMaxLevel, gNGroups, gNpb, gM) = graphParams(idx)
-            val (bhLaw, uhLaw, ueLaw, efLaw) =
+            val (gHops, gUpperHops, gUpperEf, gEfLaw) =
               graft.operators.GraphAnn.serveBudgetFor(gN)
-            val gHops = graphServeKnob("spark.graft.graph.baseHops", bhLaw)
-            val gUpperHops = graphServeKnob("spark.graft.graph.upperHops", uhLaw)
-            val gUpperEf = graphServeKnob("spark.graft.graph.upperEf", ueLaw)
-            val gEfLaw = efLaw
             val baseAll = graft.operators.IndexCache.readCached(spark, s"$idx/base")
             val base =
               if (touched.nonEmpty) baseAll.filter(!col("id").isin(touched: _*))
@@ -2141,8 +2054,7 @@ class CollectionData(client: ChromaSpark) {
             // navigation actually works on. Sub-gate corpora (every
             // oracled fixture) keep the certified full walk serve.
             val exhaustCap = graphServeKnob("spark.graft.graph.exhaustiveCap",
-              graft.operators.GraphAnn.ExhaustiveLayerCapRows.toInt,
-              warnOnDeviation = false).toLong
+              graft.operators.GraphAnn.ExhaustiveLayerCapRows.toInt).toLong
             // lStar = the layer scored exhaustively. 0 is the BASE
             // itself (r14): in the band gate ≤ N ≤ cap the whole
             // corpus is already model-scale by the law's own
@@ -2302,8 +2214,7 @@ class CollectionData(client: ChromaSpark) {
               seeds0v = graft.operators.GraphAnn.beamSearchSeeded(
                   qframe, layerFrame(l), edgesL, seeds0v,
                   ef = gUpperEf, hops = gUpperHops, dist,
-                  pbBuckets = None,
-                  broadcastFrontier = graphBroadcastFrontier)
+                  pbBuckets = None)
                 .localCheckpoint(false)
             }
             seeds0v
@@ -2312,8 +2223,7 @@ class CollectionData(client: ChromaSpark) {
             graft.operators.GraphAnn.beamSearchSeeded(
               qframe, corpus, graph, seeds,
               ef = beamEfServe,
-              hops = gHops, dist, pbBuckets = Some(gNpb),
-              broadcastFrontier = graphBroadcastFrontier)
+              hops = gHops, dist, pbBuckets = Some(gNpb))
             }
             // GROUP EXPANSION (r11, the dedup-aware build's serve
             // half): the walk ran over group REPRESENTATIVES, so
@@ -3309,14 +3219,6 @@ object CollectionData {
     graft.Lru.bounded[String, Array[(Int, Long)]](1024)
   private[catalog] val filteredCellStatsComputes =
     new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** One warning per distinct message for the serve-knob deviation
-    * audit trail — session-long dedup so a sweep loop does not spam.
-    */
-  private val warnedOnce =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private[catalog] def warnOnce(msg: String): Unit =
-    if (warnedOnce.add(msg)) Console.err.println(s"[graft] WARN $msg")
 
   /** Content fingerprints memoized per (dir, batch, log file set) —
     * pure given an append-only log (any mutation changes the key),

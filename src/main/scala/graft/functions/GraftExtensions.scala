@@ -9,64 +9,15 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * cluster config and the graft SQL functions exist in every session
   * — the deployment path for clusters where sessions are built by a
   * platform, not by user code. (In-process callers can use
-  * [[VectorExpressions.register]] on a live session instead.)
+  * [[VectorExpressions.register]] on a live session instead; both
+  * paths read the one `VectorExpressions.functions` table.)
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo("graft.functions", "graft_cosine"),
-      args => { require(args.length == 2); CosineSimilarity(args(0), args(1)) }))
-    ext.injectFunction((FunctionIdentifier("graft_dot"),
-      new ExpressionInfo("graft.functions", "graft_dot"),
-      args => { require(args.length == 2); DotProduct(args(0), args(1)) }))
-    ext.injectFunction((FunctionIdentifier("graft_l2"),
-      new ExpressionInfo("graft.functions", "graft_l2"),
-      args => { require(args.length == 2); L2Distance(args(0), args(1)) }))
-    ext.injectFunction((FunctionIdentifier("graft_shingle_hashes"),
-      new ExpressionInfo("graft.functions", "graft_shingle_hashes"),
-      args => {
-        require(args.length == 2)
-        ShingleHashes(args(0), GraftExtensions.intLiteral(args(1), "n"))
-      }))
-    ext.injectFunction((FunctionIdentifier("graft_simhash64"),
-      new ExpressionInfo("graft.functions", "graft_simhash64"),
-      args => { require(args.length == 1); SimHash64(args(0)) }))
-    ext.injectFunction((FunctionIdentifier("graft_minhash"),
-      new ExpressionInfo("graft.functions", "graft_minhash"),
-      args => {
-        require(args.length == 2)
-        MinHashSignature(args(0), GraftExtensions.intLiteral(args(1), "perms"))
-      }))
-    ext.injectFunction((FunctionIdentifier("graft_shingle_hashes_md5"),
-      new ExpressionInfo("graft.functions", "graft_shingle_hashes_md5"),
-      args => {
-        require(args.length == 2)
-        ShingleHashesMd5(args(0), GraftExtensions.intLiteral(args(1), "n"))
-      }))
-    ext.injectFunction((FunctionIdentifier("graft_simhash60"),
-      new ExpressionInfo("graft.functions", "graft_simhash60"),
-      args => { require(args.length == 1); SimHash60(args(0)) }))
-    ext.injectFunction((FunctionIdentifier("graft_minhash_grid"),
-      new ExpressionInfo("graft.functions", "graft_minhash_grid"),
-      args => {
-        require(args.length == 2)
-        MinHashGridSignature(args(0), GraftExtensions.intLiteral(args(1), "perms"))
-      }))
-    ext.injectFunction((FunctionIdentifier("graft_cms_estimate"),
-      new ExpressionInfo("graft.functions", "graft_cms_estimate"),
-      args => { require(args.length == 2); CmsEstimate(args(0), args(1)) }))
-    ext.injectFunction((FunctionIdentifier("graft_hist_quantile"),
-      new ExpressionInfo("graft.functions", "graft_hist_quantile"),
-      args => {
-        require(args.length == 5)
-        HistQuantile(args(0),
-          GraftExtensions.doubleLiteral(args(1), "lo"),
-          GraftExtensions.doubleLiteral(args(2), "hi"),
-          GraftExtensions.intLiteral(args(3), "bins"),
-          GraftExtensions.doubleLiteral(args(4), "q"))
-          .toAggregateExpression()
-      }))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    VectorExpressions.functions.foreach { case (name, builder) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo("graft.functions", name), builder))
+    }
 }
 
 object GraftExtensions {

@@ -334,7 +334,10 @@ object VectorExpressions {
   def int8Dot(a: Column, b: Column): Column =
     GraftSqlBridge.column(Int8Dot(GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
 
-  private val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+  /** The SQL function table: [[register]] and [[GraftExtensions]]
+    * both install exactly these names.
+    */
+  private[functions] val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
     ("graft_cosine", { args => require(args.length == 2); CosineSimilarity(args(0), args(1)) }),
     ("graft_dot",    { args => require(args.length == 2); DotProduct(args(0), args(1)) }),
     ("graft_l2",     { args => require(args.length == 2); L2Distance(args(0), args(1)) }),

@@ -1215,16 +1215,6 @@ class CollectionDataSpec extends SparkSpec {
     val cl = new ChromaSpark(spark, wh)
     val d = new CollectionData(cl)
 
-    // beam-width law: search_ef wins when declared; otherwise
-    // ef = max(law base ef, n_results) — the serveBudgetFor 4-tuple's
-    // fourth value (48/64/96 per budget tier, r13), never a corpus
-    // term (r10: the hierarchy's descent replaced the flat √N law)
-    assert(d.graphBeamEf(None, 10, efLaw = 48) === 48)
-    assert(d.graphBeamEf(None, 100, efLaw = 48) === 100)
-    assert(d.graphBeamEf(Some(200), 10, efLaw = 48) === 200)
-    assert(d.graphBeamEf(Some(12), 10, efLaw = 48) === 12)
-    assert(d.graphBeamEf(None, 10, efLaw = 96) === 96)
-
     cl.createCollection("gf", Some(Map("hnsw:space" -> "cosine", "hnsw:M" -> "8")))
     val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val rows = emb.filter(c("vec_id") >= 10)
@@ -1326,31 +1316,12 @@ class CollectionDataSpec extends SparkSpec {
     val cl = new ChromaSpark(spark, wh)
     val d = new CollectionData(cl)
 
-    // 1) serve knobs ride the production path but are NOT folded into
-    // any artifact identity — a 0/negative/non-integer leftover (e.g.
-    // from a TuneGraph sweep in the same session) must fail loudly
-    // instead of silently degrading a certified serve (r11 advisory)
-    for ((k, bad) <- Seq(
-        ("spark.graft.graph.baseHops", "0"),
-        ("spark.graft.graph.upperHops", "-2"),
-        ("spark.graft.graph.upperEf", "abc"),
-        ("spark.graft.graph.ef", "0"),
-        ("spark.graft.graph.maxLevel", "-1"))) {
-      spark.conf.set(k, bad)
-      try intercept[IllegalArgumentException] {
-        k match {
-          case "spark.graft.graph.baseHops"  => d.GraphBaseHops
-          case "spark.graft.graph.upperHops" => d.GraphUpperHops
-          case "spark.graft.graph.upperEf"   => d.GraphUpperEf
-          case "spark.graft.graph.ef"        => d.graphBeamEf(None, 10, 3)
-          case _                             => d.graphMaxLevelFor(8, 1000L)
-        }
-      } finally spark.conf.unset(k)
-    }
-    // a VALID override still works (it warns once; it must not fail)
-    spark.conf.set("spark.graft.graph.baseHops", "4")
-    try assert(d.GraphBaseHops === 4)
-    finally spark.conf.unset("spark.graft.graph.baseHops")
+    // 1) a 0/negative/non-integer maxLevel must fail loudly instead
+    // of silently shaping a build (r11 advisory)
+    spark.conf.set("spark.graft.graph.maxLevel", "-1")
+    try intercept[IllegalArgumentException] {
+      d.graphMaxLevelFor(8, 1000L)
+    } finally spark.conf.unset("spark.graft.graph.maxLevel")
 
     // 2) exact escape hatch (r11 advisory): the r10 side-tier probe
     // made filtered queries on graph-declared collections approximate

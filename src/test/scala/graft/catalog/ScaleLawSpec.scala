@@ -81,7 +81,7 @@ class ScaleLawSpec extends SparkSpec {
     assert(slopes.last < 0.1, s"tail growth exponent ${slopes.last} not log-like")
   }
 
-  test("graph serve-budget law: fixture constants below the gate, certified steps above, knob overrides win") {
+  test("graph serve-budget law: fixture constants below the gate, certified steps above") {
     import graft.operators.GraphAnn.{serveBudgetFor, ScaleGateRows,
       BuildVolumeGateRows}
     // every oracled corpus (≤ 5,970 rows) serves the certified
@@ -98,15 +98,6 @@ class ScaleLawSpec extends SparkSpec {
     // 6.4M: 0.956→0.970 mean / p10 0.80→0.90, saturating at 128)
     Seq(BuildVolumeGateRows, 6400000L, 1000000000L).foreach(n =>
       assert(serveBudgetFor(n) === ((4, 3, 128, 96)), s"volume-tier budget at $n"))
-    // the serve reads the law through graphServeKnob, so a session
-    // override still wins (sweep/ops discipline) — and is a genuine
-    // override now, not the only way to hold recall
-    spark.conf.set("spark.graft.graph.upperEf", "96")
-    try {
-      val wh = java.nio.file.Files.createTempDirectory("graft-budgetlaw").toString
-      val d = new CollectionData(new ChromaSpark(spark, wh))
-      assert(d.GraphUpperEf === 96)
-    } finally spark.conf.unset("spark.graft.graph.upperEf")
   }
 
   test("IVF cells follow the sqrt law; probed fraction shrinks as N^(-1/2) below the gate, N^(-1/4) above") {

@@ -1,10 +1,12 @@
 #!/bin/bash
-# Direct JVM runner for the measurement mains (TuneScale/TuneNprobe/
-# Bench/...): same flags build.sbt gives forked runs, but without the
-# sbt project lock, so long ladder builds and serve-only sweeps can
-# run as parallel OS processes. Compile first (sbt -batch compile).
-#   SPARK_DRIVER_MEM=48g tools/run-main.sh graft.TuneNprobe <args...>
+# Direct JVM runner for the measurement mains (TuneScale/Bench/...):
+# same flags build.sbt gives forked runs, but without the sbt project
+# lock, so long ladder builds can run as parallel OS processes. Runs
+# the classes compiled in the checkout that holds this script.
+# Compile first (sbt -batch compile).
+#   SPARK_DRIVER_MEM=48g tools/run-main.sh graft.TuneScale
 set -euo pipefail
+ROOT=$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)
 MEM=${SPARK_DRIVER_MEM:-8g}
 OPENS=""
 for p in java.base/java.lang java.base/java.lang.invoke \
@@ -19,4 +21,4 @@ mkdir -p /dev/shm/graft-tmp
 exec java $OPENS \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC -Xmx"$MEM" \
   -Djava.io.tmpdir=/dev/shm/graft-tmp \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" "$@"
+  -cp "$ROOT/target/scala-2.13/classes:/opt/spark/jars/*" "$@"
